@@ -286,23 +286,32 @@ object Bench {
         "emb_pca_power,mwas_pipeline_full,dedup_components," +
           "triangle_count,ann_lsh_bucket,dedup_simhash").split(",").toSeq
         .filter(SparkEntry.queries.contains)
-      val rows = names.map { name =>
-        val ts = (1 to reps).map { _ =>
-          spark.catalog.clearCache()
-          graft.operators.MwasPipelineQueries.evict()
-          val t0 = System.nanoTime()
-          // a slope failure is visible on stderr but must not disturb
-          // the main surface's errors/exit contract
-          try SparkEntry.queries(name)(spark, sd)
+      // a failed rep is not a measurement: the query leaves "queries"
+      // and is named under the slope's own "errors" (stderr keeps the
+      // message); the main surface's errors/exit contract is untouched
+      def rep(name: String): Option[Double] = {
+        spark.catalog.clearCache()
+        graft.operators.MwasPipelineQueries.evict()
+        val t0 = System.nanoTime()
+        try {
+          SparkEntry.queries(name)(spark, sd)
             .write.format("noop").mode("overwrite").save()
-          catch { case e: Throwable =>
-            System.err.println(s"BENCH SLOPE FAIL $name: ${e.getMessage}")
-          }
-          (System.nanoTime() - t0) / 1e9
-        }.toVector
-        "\"" + name + f"""\":${median(ts)}%.3f"""
+          Some((System.nanoTime() - t0) / 1e9)
+        } catch { case e: Throwable =>
+          System.err.println(s"BENCH SLOPE FAIL $name: ${e.getMessage}")
+          None
+        }
       }
-      s""","slope":{"dir":"$sd","queries":${rows.mkString("{", ",", "}")}}"""
+      val timed = names.map { name =>
+        val ts = Iterator.continually(rep(name)).take(reps)
+          .takeWhile(_.isDefined).flatten.toVector
+        name -> Option.when(ts.size == reps)(median(ts))
+      }
+      val rows = timed.collect { case (name, Some(m)) =>
+        "\"" + name + f"""\":$m%.3f"""
+      }
+      val slopeErrs = timed.collect { case (name, None) => "\"" + name + "\"" }
+      s""","slope":{"dir":"$sd","queries":${rows.mkString("{", ",", "}")},"errors":${slopeErrs.mkString("[", ",", "]")}}"""
     }.getOrElse("")
 
     // Full per-query detail (name-sorted, 3 decimals) goes to a file: the

@@ -21,7 +21,6 @@ case class MwasConfig(
     pValueThreshold: Double = 0.005, // P_VALUE_THRESHOLD :85
     onlyTTest: Boolean = false, // ONLY_T_TEST :86
     alreadyNormalized: Boolean = false, // ALREADY_NORMALIZED :84
-    implicitZeros: Boolean = true, // IMPLICIT_ZEROS :81
     permutationSideCutoff: Int = 4, // min-side size routing :407
     biosampleListCap: Int = 1000, // truncated listing :428-430
     permResamples: Int = 10000, // n_resamples :416
@@ -38,23 +37,7 @@ case class MwasConfig(
     // p-value needs resampling — so value collection and the kernel are
     // skipped wholesale and the plan stays pure relational algebra.
     // p_value is null (and status says so) on permutation-routed rows.
-    statClosedForm: Boolean = false,
-    // opt-in delta-driven readout for incrementalTrigger: restrict the
-    // per-trigger readout to CHANGED bioprojects and carry unchanged
-    // prior rows. Default OFF after measurement (r14): at every locally
-    // reachable scale the readout is plan-overhead-bound (~3 s fixed vs
-    // ~5% data term at 550k state rows — tools.DeltaReadoutProbe), so
-    // the delta arm's extra jobs cost more than the restriction saves
-    // (tools.StreamMwasAb arm C, 10-trigger bplocal: 59.7 vs 42.3 s).
-    // The positive regime is MEASURED, not argued (r15,
-    // DeltaReadoutProbe on the genrel 100× fixture, 5.5M state rows,
-    // 1-of-20 bioprojects changed): restricted readout 5.92 s vs full
-    // 13.68 s — 2.3× in the delta arm's favor once the data term
-    // dominates the fixed cost. Both sides of the crossover are now
-    // measurement (NOTES_r15). Parity is measured, not assumed:
-    // row-identical, floats within 5.7e-12 (reassociation only — the
-    // profcompare standard).
-    deltaReadout: Boolean = false)
+    statClosedForm: Boolean = false)
 
 /** The MWAS query engine: the reference's run_on_file + process_bioproject +
   * process_group call tree (main/mwas_general.py:344-679) collapsed into ONE
@@ -152,41 +135,27 @@ object Pipeline {
         col("set_id"), explode(col("members")).as("bio_sample")))
 
   /** One incremental trigger step — shared by the registry's
-    * `stream_mwas` and tools.StreamMwasAb so the measured arm IS the
-    * shipped arm. Merges the batch's biosample-grain delta into `state`,
-    * then produces the new full result.
+    * `stream_mwas` and the benchmark's stream workload. Merges the
+    * batch's biosample-grain delta into `state`, then produces the new
+    * full result by a full-recompute readout over the merged state.
     *
-    * The readout is full-recompute by default and DELTA-DRIVEN on
-    * opt-in (`cfg.deltaReadout` + update locality: 2·|changed| <
-    * |universe|): every readout key carries bio_project (bioprojects
-    * are statistically independent by construction), so a bioproject
-    * absent from this batch's delta cannot change a single output row —
-    * the contrast join + Welch readout then runs only over the changed
-    * bioprojects' restricted inputs, unioned with the unchanged
-    * bioprojects' prior rows. VERDICT r13 item 2 asked for this shape
-    * with a measured wall drop; the measurement came back NEGATIVE at
-    * every locally reachable scale and is recorded rather than forced:
-    * a single 550k-row-state readout is 2.96 s full vs 2.80 s
-    * restricted-to-2-of-20-bioprojects (tools.DeltaReadoutProbe) — the
-    * readout wall is ~95% plan/stage fixed cost at local SFs, so arm
-    * C's extra per-trigger jobs cost more than the restriction saves
-    * (tools.StreamMwasAb 10-trigger bplocal at 10×: C 59.7 s vs B
-    * 42.3 s). The flag is for the regime the asymptotics favor — state
-    * large enough that the readout's DATA term dominates its ~3 s fixed
-    * term, i.e. real-cluster minutes-long readouts, where per-trigger
-    * work drops to O(changed). Parity of the delta arm is measured, not
-    * assumed: row-identical, floats within 5.7e-12 of the full
-    * recompute (reassociation only — the profcompare standard).
-    * Reference analogue: the block loop re-running every bioproject per
-    * chunk (main/mwas_general.py:601-614).
+    * A delta-driven readout (restrict to the changed bioprojects, carry
+    * the others' prior rows) was measured and dropped: at every locally
+    * reachable scale the readout is ~95% plan/stage fixed cost, so its
+    * extra per-trigger jobs cost more than the restriction saves
+    * (10-trigger stream at 10×: 59.7 s vs 42.3 s full); it paid only once
+    * state reached 5.5M rows (NOTES_r14, NOTES_r15). Reference analogue:
+    * the block loop re-running every bioproject per chunk
+    * (main/mwas_general.py:601-614).
     *
-    * Both returned frames are eager localCheckpoints: state and results
-    * are long-lived across triggers, so the lineage must be cut (the
-    * BPE/PCA per-round precedent) and the carried rows must not be
-    * re-derived from a parquet dir that the next trigger overwrites.
+    * The new state is an eager localCheckpoint: it is long-lived across
+    * triggers, so the lineage must be cut (the BPE/PCA per-round
+    * precedent). The results frame is returned lazy — nothing carries it
+    * to the next trigger.
     *
-    * @param nUniverse  |catalog bioproject universe| — computed once per
-    *                   stream (a count on [[dims]].bpUniverse)
+    * @param nUniverse  unused by the full-recompute readout; kept so
+    *                   existing callers compile unchanged
+    * @param results    unused likewise (the previous trigger's results)
     * @return (new state, new full results) */
   def incrementalTrigger(batch: DataFrame, catalog: DataFrame,
       sets: DataFrame, cfg: MwasConfig, pdims: PipelineDims,
@@ -198,45 +167,7 @@ object Pipeline {
       case Some(prev) => mergeBiosampleState(prev, delta)
     }
     val next = merged.localCheckpoint()
-    val full = results match {
-      case Some(prev) if cfg.deltaReadout =>
-        // changed set — bioproject grain, bounded by the universe size,
-        // already reduced by the delta aggregation: tiny. Checkpointed
-        // so the routing count and the joins share one computation.
-        val changed = delta.select(col("bio_project")).distinct()
-          .localCheckpoint()
-        val nChanged = changed.count()
-        if (2 * nChanged < nUniverse) {
-          // EVERY readout input is bio_project-keyed — restrict them
-          // all, not just the state: the stored-membership explode and
-          // the contrast join against `sets` are the readout's data
-          // terms, and a semi-join against the broadcast changed set is
-          // a map-side filter over the persisted dims (no shuffle)
-          val restricted = next.join(broadcast(changed),
-            Seq("bio_project"), "left_semi")
-          val rdims = PipelineDims(
-            bpUniverse = pdims.bpUniverse.join(broadcast(changed),
-              Seq("bio_project"), "left_semi"),
-            member = pdims.member.join(broadcast(changed),
-              Seq("bio_project"), "left_semi"))
-          val rsets = sets.join(broadcast(changed.select(
-            col("bio_project").as("bioproject"))),
-            Seq("bioproject"), "left_semi")
-          runFromBiosampleState(restricted, catalog, rsets, cfg,
-            Some(rdims))
-            .unionByName(prev.join(broadcast(changed.select(
-              col("bio_project").as("bioproject"))),
-              Seq("bioproject"), "left_anti"))
-        } else runFromBiosampleState(next, catalog, sets, cfg, Some(pdims))
-      case _ =>
-        runFromBiosampleState(next, catalog, sets, cfg, Some(pdims))
-    }
-    // the results checkpoint exists ONLY for the delta carry (the next
-    // trigger's anti-join must not re-derive rows from a parquet dir the
-    // write below overwrites); in full-recompute mode nothing ever reads
-    // the carried frame, and the extra materialization cost a measured
-    // ~1 s/trigger (BENCH stream_mwas 11.1 → 14.2 s before this guard)
-    (next, if (cfg.deltaReadout) full.localCheckpoint() else full)
+    (next, runFromBiosampleState(next, catalog, sets, cfg, Some(pdims)))
   }
 
   /** Stages 2b–5: the readout from the mergeable biosample state down to

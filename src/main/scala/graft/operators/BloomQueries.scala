@@ -27,7 +27,7 @@ import graft.core.Tables
   * bloom indexes, broadcast-bloom row filtering in Spark's own runtime
   * filtering) stated as an operator.
   *
-  * Measured ([[graft.operators.tools.BloomAb]], 10× fixture, broadcast
+  * Measured (NOTES_r11, 10× fixture, broadcast
   * disabled on both arms to force the big-benchmark join strategy): the
   * sieve cuts semi-join shuffle volume 48% at the fixture's mere 9:1
   * probe:bench gram ratio — the reduction is proportional to that
@@ -94,14 +94,9 @@ object BloomQueries {
     bos.toByteArray
   }
 
-  /** Shared builder: the decontamination relation with the bloom
-    * prefilter and the broadcast hint independently switchable — the
-    * registry query is (bloom, hint) = (true, true); `tools.BloomAb`
-    * measures the (exact vs bloom) pair with the hint OFF, which is the
-    * beyond-broadcast regime where the bloom is the difference between
-    * shuffling every corpus gram and shuffling only the survivors. */
-  private[graft] def decontaminate(s: SparkSession, dir: String,
-      useBloom: Boolean, hintBroadcast: Boolean = true): DataFrame = {
+  /** The decontamination relation: bloom prefilter, then the exact
+    * semi join against the broadcast benchmark grams. */
+  def bloomDecontaminate(s: SparkSession, dir: String): DataFrame = {
     val d = Tables(s, dir, "documents")
     val bench = benchGrams(d)
     val probe = probeGrams(d)
@@ -109,12 +104,9 @@ object BloomQueries {
     val totals = probe.groupBy(col("doc_id")).agg(count(lit(1)).as("n_grams"))
     // the bloom rejects ~99% of clean grams BEFORE the join; the exact
     // semi join then removes the false positives, so n_hit is exact
-    val sieved =
-      if (!useBloom) probe
-      else probe.filter(
-        mightContain(sketchBytes(bench, capacityBound(d)), col("gh")))
-    val benchSide = if (hintBroadcast) broadcast(bench) else bench
-    val hits = sieved.join(benchSide, Seq("gh"), "left_semi")
+    val sieved = probe.filter(
+      mightContain(sketchBytes(bench, capacityBound(d)), col("gh")))
+    val hits = sieved.join(broadcast(bench), Seq("gh"), "left_semi")
       .groupBy(col("doc_id")).agg(count(lit(1)).as("n_hit"))
     totals.join(hits, Seq("doc_id"), "left_outer")
       .na.fill(Map("n_hit" -> 0L))
@@ -124,9 +116,6 @@ object BloomQueries {
       .withColumn("contaminated", col("overlap") >= 0.2)
       .orderBy(col("doc_id"))
   }
-
-  def bloomDecontaminate(s: SparkSession, dir: String): DataFrame =
-    decontaminate(s, dir, useBloom = true)
 
   /** Streaming (ingest-time) decontamination — the shape a production
     * crawl actually runs: the benchmark suite is SLOWLY-CHANGING (its
@@ -147,17 +136,11 @@ object BloomQueries {
     * parquet so the per-batch verify join re-reads a pruned scan
     * instead of re-deriving the explode+distinct. */
   def streamDecontaminate(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
     val d = Tables(s, dir, "documents")
     val bench = benchGrams(d)
 
-    val base = new java.io.File(
-      System.getProperty("java.io.tmpdir"),
-      "graft_stream_decon_" + graft.streaming.StreamingQueries.pathTag(dir) +
-        "_" + ProcessHandle.current().pid())
-    org.apache.commons.io.FileUtils.deleteQuietly(base)
-    base.mkdirs()
-    graft.core.TempDirs.cleanOnExit(base.toPath)
+    val base = graft.streaming.StreamingQueries.scratchDir(
+      "graft_stream_decon", dir)
     val benchDir = s"$base/bench"
     val outDir = s"$base/result"
 
@@ -170,20 +153,12 @@ object BloomQueries {
 
     val probeDocs = d.filter(col("doc_id") % 10 =!= 0)
       .select(col("doc_id"), col("text"))
-    val (idMin, idMax) = graft.streaming.StreamingQueries.idRange(probeDocs, "doc_id")
-      .getOrElse(throw new IllegalArgumentException(
-        "empty input relation: nothing to stream"))
-    val b1 = idMin + (idMax - idMin) / 3
-    val b2 = idMin + 2 * (idMax - idMin) / 3
-    val staging = graft.streaming.StreamingQueries.stageBatches(
+    val staging = graft.streaming.StreamingQueries.stageThirds(
       "graft_stream_decon_stage_" + graft.streaming.StreamingQueries.pathTag(dir),
-      Seq(probeDocs.filter(col("doc_id") <= b1),
-        probeDocs.filter(col("doc_id") > b1 && col("doc_id") <= b2),
-        probeDocs.filter(col("doc_id") > b2)))
+      probeDocs, "doc_id")
 
-    val src = s.readStream.schema(probeDocs.schema)
-      .option("maxFilesPerTrigger", "1").parquet(staging.toString)
-    val q = src.writeStream.foreachBatch { (batch: DataFrame, _: Long) =>
+    graft.streaming.StreamingQueries.runBatches(s, probeDocs.schema,
+        staging) { batch =>
       val ss = batch.sparkSession
       val grams = batch
         .select(col("doc_id"), explode(grams5(col("text"))).as("gh"))
@@ -199,9 +174,7 @@ object BloomQueries {
             .as("overlap"))
         .withColumn("contaminated", col("overlap") >= 0.2)
         .write.mode("append").parquet(outDir)
-      ()
-    }.trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
+    }
     s.read.parquet(outDir).orderBy(col("doc_id"))
   }
 

@@ -304,8 +304,10 @@ object DedupQueries {
     * a corpus where ≥ a quarter of the docs collapse pays the
     * contraction. The routing is PHYSICAL ONLY — both arms compute the
     * identical pair relation (spec-pinned on a dup-heavy corpus), so no
-    * oracle surface changes; the estimator's ±2% HLL error can only
-    * move the cutover point, never a result. */
+    * oracle surface changes. `approx_count_distinct` runs at Spark's
+    * default rsd of 0.05 (5% relative standard error on the distinct
+    * count, so about ±0.05·(1 − dupMass) on the mass); that error can
+    * only move the cutover point, never a result. */
   private[operators] val contractionDupMassGate = 0.25
 
   private[operators] def bandedWordPairsJ(d: DataFrame): DataFrame = {
@@ -1382,17 +1384,14 @@ object DedupQueries {
     * absent — callers left-join and coalesce). Shared by the text and
     * embedding clustering operators; the pair SOURCE is the pluggable
     * part, the contraction is identical. */
-  /* `roundsPerCheck` batches star-round composites between convergence
-   * checks. SHIPPED DEFAULT IS 1: `tools.ComponentsAb` measured
-   * check-every-2 SLOWER at sf0.1 (6.72 vs 5.48 s median-of-5, flat
-   * control) — the fixpoint is reached in few composites here, and the
-   * unavoidable wasted composite past it (two shuffled aggregations +
-   * joins over the full edge set) costs more than the halved
-   * checkpoint+signature barriers save. The lever would flip on graphs
-   * deep enough that barrier overhead dominates (many rounds, small
-   * per-round delta); it stays parameterized for that case. */
-  private[operators] def connectedComponents(edges0: DataFrame,
-      roundsPerCheck: Int = 1): DataFrame = {
+  /* One star-round composite per convergence check: checking every 2
+   * rounds measured SLOWER at sf0.1 (6.72 vs 5.48 s median-of-5, flat
+   * control; NOTES_r10) — the fixpoint is reached in few composites
+   * here, and the unavoidable wasted composite past it (two shuffled
+   * aggregations + joins over the full edge set) costs more than the
+   * halved checkpoint+signature barriers save. */
+  private[operators] def connectedComponents(edges0: DataFrame)
+      : DataFrame = {
     // large-star: every neighbor v > u re-points to m = min(Γ(u) ∪ {u})
     def largeStar(e: DataFrame): DataFrame = {
       val sym = e.union(e.select(col("v").as("u"), col("u").as("v")))
@@ -1426,9 +1425,7 @@ object DedupQueries {
     var converged = false
     var rounds = 0
     while (!converged && rounds < 20) { // log2(n) bound; 20 ≫ any real depth
-      val composed = (1 to roundsPerCheck)
-        .foldLeft(edges)((e, _) => smallStar(largeStar(e)))
-      val next = composed.localCheckpoint(true)
+      val next = smallStar(largeStar(edges)).localCheckpoint(true)
       val sig = signature(next)
       converged = sig == prevSig
       prevSig = sig
@@ -1745,7 +1742,7 @@ object DedupQueries {
     * single-pass. The groupBy-argmax + join-back alternative duplicates
     * that whole subtree under both join branches (Catalyst does not
     * reuse common subplans — its formatted plan showed the corpus read
-    * and scored twice); `tools.CanonicalAb` measured the window form
+    * and scored twice); an A/B (NOTES_r10) measured the window form
     * 11% faster at sf0.1 and 15% at the 10× stress fixture with
     * result-set equality gated, and the gap grows with corpus size
     * since the duplicated work IS the corpus pass. (Not the r9 ANN

@@ -561,32 +561,17 @@ object EmbeddingQueries {
     val b = v.filter(col("label") >= 5)
       .select(col("vec_id").as("tgt_id"), col("v").as("vb"),
         col("nrm").as("nb"))
-    val (idMin, idMax) = graft.streaming.StreamingQueries.idRange(b, "tgt_id")
-      .getOrElse(throw new IllegalArgumentException(
-        "empty input relation: nothing to stream"))
-    val s1 = idMin + (idMax - idMin) / 3
-    val s2 = idMin + 2 * (idMax - idMin) / 3
-    val staging = graft.streaming.StreamingQueries.stageBatches(
+    val staging = graft.streaming.StreamingQueries.stageThirds(
       "graft_stream_bitext_stage_" + graft.streaming.StreamingQueries.pathTag(dir),
-      Seq(b.filter(col("tgt_id") <= s1),
-        b.filter(col("tgt_id") > s1 && col("tgt_id") <= s2),
-        b.filter(col("tgt_id") > s2)))
+      b, "tgt_id")
 
-    val base = new java.io.File(
-      System.getProperty("java.io.tmpdir"),
-      "graft_stream_bitext_" + graft.streaming.StreamingQueries.pathTag(dir) +
-        "_" + ProcessHandle.current().pid())
-    org.apache.commons.io.FileUtils.deleteQuietly(base)
-    base.mkdirs()
-    graft.core.TempDirs.cleanOnExit(base.toPath)
+    val base = graft.streaming.StreamingQueries.scratchDir(
+      "graft_stream_bitext", dir)
     val bwdDir = s"$base/bwd"
     val resultDir = s"$base/result"
     var fwdState: Option[DataFrame] = None
 
-    val src = s.readStream.schema(
-        b.schema).option("maxFilesPerTrigger", "1")
-      .parquet(staging.toString)
-    val q = src.writeStream.foreachBatch { (batch: DataFrame, _: Long) =>
+    graft.streaming.StreamingQueries.runBatches(s, b.schema, staging) { batch =>
       val ss = batch.sparkSession
       val prevParts = ss.conf.get("spark.sql.shuffle.partitions")
       ss.conf.set("spark.sql.shuffle.partitions", "8")
@@ -626,8 +611,7 @@ object EmbeddingQueries {
           fwdAgg, ss.read.parquet(bwdDir))
           .write.mode("overwrite").parquet(resultDir)
       } finally ss.conf.set("spark.sql.shuffle.partitions", prevParts)
-    }.trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-    q.awaitTermination()
+    }
 
     s.read.parquet(resultDir)
       .select(col("src_id"), col("tgt_id"), col("cosine"), col("margin"),

@@ -768,8 +768,8 @@ object MwasPipelineQueries {
 
   /** Incremental MWAS — the engine composed with streaming ingest. The
     * user input (run list) arrives as a file stream in 3 micro-batches;
-    * `foreachBatch` appends each batch to the accumulated input and
-    * recomputes the WHOLE pipeline over it, overwriting the result — the
+    * each batch merges into the pipeline's sufficient-statistics state
+    * and the readout recomputes the WHOLE result, overwriting it — the
     * lambda-architecture recompute loop (and the honest analogue of the
     * reference's hand-rolled 1000-bioproject block loop,
     * main/mwas_general.py:601-614, except each increment yields a complete
@@ -783,15 +783,8 @@ object MwasPipelineQueries {
   def streamMwasQuery(s: SparkSession, dir: String): DataFrame = {
     // (no events read here — the former defensive nanosAsLong conf set was
     // removed with the schema-adaptive Events codec, r10)
-    // pid-scoped like StreamingQueries.stageBatches: a fixed name would
-    // let a concurrently-exiting peer JVM delete this dir mid-stream
-    val base = new java.io.File(
-      System.getProperty("java.io.tmpdir"),
-      "graft_stream_mwas_" + graft.streaming.StreamingQueries.pathTag(dir) +
-        "_" + ProcessHandle.current().pid())
-    org.apache.commons.io.FileUtils.deleteQuietly(base)
-    base.mkdirs()
-    graft.core.TempDirs.cleanOnExit(base.toPath)
+    val base = graft.streaming.StreamingQueries.scratchDir(
+      "graft_stream_mwas", dir)
     val resultDir = s"$base/result"
 
     // stage the user input into 3 deterministic batches by run hash —
@@ -833,37 +826,24 @@ object MwasPipelineQueries {
     // eager localCheckpoints (block-manager resident, no FS round trip;
     // the lineage cut also keeps the merge plan flat across triggers —
     // the BPE/PCA per-round precedent).
-    // catalog-universe size for the adaptive readout's routing guard —
-    // one tiny count, once per stream
-    val nUniverse = pdims.bpUniverse.count()
-    val src = s.readStream.schema(in.schema)
-      .option("maxFilesPerTrigger", "1").parquet(staging.toString)
     var state: Option[DataFrame] = None
-    var results: Option[DataFrame] = None
-    val q = src.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        // batch functions run sequentially on the driver: scoping the
-        // shuffle width to the per-increment data size is safe and cuts
-        // 3 readouts' worth of near-empty shuffle tasks
-        val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-        s.conf.set("spark.sql.shuffle.partitions", "8")
-        try {
-          // merge + readout via the shared trigger step
-          // ([[Pipeline.incrementalTrigger]]). deltaReadout stays at its
-          // measured default (off — see the step's scaladoc for the
-          // negative result and crossover attribution, VERDICT r13 item
-          // 2); parity gated by the unchanged batch oracle
-          // (pipelineTSql), wall measured by tools.StreamMwasAb
-          val (next, full) = Pipeline.incrementalTrigger(batch, cat,
-            sets, MwasConfig(onlyTTest = true), pdims, nUniverse,
-            state, results)
-          state = Some(next)
-          results = Some(full)
-          full.write.mode("overwrite").parquet(resultDir)
-        } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-    try q.awaitTermination()
+    try graft.streaming.StreamingQueries.runBatches(s, in.schema,
+        staging) { batch =>
+      // batch functions run sequentially on the driver: scoping the
+      // shuffle width to the per-increment data size is safe and cuts
+      // 3 readouts' worth of near-empty shuffle tasks
+      val prevParts = s.conf.get("spark.sql.shuffle.partitions")
+      s.conf.set("spark.sql.shuffle.partitions", "8")
+      try {
+        // merge + full readout via the shared trigger step
+        // ([[Pipeline.incrementalTrigger]]); parity gated by the
+        // unchanged batch oracle (pipelineTSql)
+        val (next, full) = Pipeline.incrementalTrigger(batch, cat,
+          sets, MwasConfig(onlyTTest = true), pdims, 0L, state, None)
+        state = Some(next)
+        full.write.mode("overwrite").parquet(resultDir)
+      } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
+    }
     finally {
       pdims.member.unpersist(blocking = false)
       pdims.bpUniverse.unpersist(blocking = false)
@@ -916,15 +896,6 @@ object MwasPipelineQueries {
        |WHERE bioproject IN ('PRJTEST1', 'PRJEDGE')
        |ORDER BY bioproject, attributes, "values"""".stripMargin
   }
-
-  /** tools.StreamMwasAb hooks — the stream query's exact fixtures,
-    * exposed so the A/B harness measures the same inputs the registry
-    * query streams. */
-  def abFixtures(s: SparkSession, dir: String, path: String): Unit =
-    input(s, dir).write.mode("overwrite").parquet(path)
-  def abCatalog(s: SparkSession, dir: String): DataFrame = catalog(s, dir)
-  def abSets(s: SparkSession, dir: String): DataFrame =
-    MetadataCondenser.condense(metadataLong(s, dir))
 
   val all: Seq[(String, (SparkSession, String) => DataFrame, Option[String])] =
     Seq(

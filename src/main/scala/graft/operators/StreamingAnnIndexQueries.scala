@@ -42,7 +42,7 @@ object StreamingAnnIndexQueries {
         graft.streaming.StreamingQueries.pathTag(dir),
       d, "vec_id")
 
-    val base = graft.streaming.StreamingQueries.stateBase(
+    val base = graft.streaming.StreamingQueries.scratchDir(
       "graft_stream_pqidx", dir)
     val cbDir = s"$base/codebook"
     val codesDir = s"$base/codes"

@@ -2,7 +2,6 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 /** Incremental fused curation — the flagship end-to-end pipeline
   * ([[DedupQueries.corpusPipelineE2e]]: quality floor → exact dedup →
@@ -47,26 +46,18 @@ object StreamingCurationQueries {
   def streamCorpusPipeline(s: SparkSession, dir: String): DataFrame = {
     val d = DedupQueries.docs(s, dir)
       .select(col("doc_id"), col("source"), col("text"))
-    val (idMin, idMax) = graft.streaming.StreamingQueries.idRange(d, "doc_id")
-      .getOrElse(throw new IllegalArgumentException(
-        "empty input relation: nothing to stream"))
-    val b1 = idMin + (idMax - idMin) / 3
-    val b2 = idMin + 2 * (idMax - idMin) / 3
-    val staging = graft.streaming.StreamingQueries.stageBatches(
+    val staging = graft.streaming.StreamingQueries.stageThirds(
       "graft_stream_cur_stage_" + graft.streaming.StreamingQueries.pathTag(dir),
-      Seq(d.filter(col("doc_id") <= b1),
-        d.filter(col("doc_id") > b1 && col("doc_id") <= b2),
-        d.filter(col("doc_id") > b2)))
+      d, "doc_id")
 
-    val base = graft.streaming.StreamingQueries.stateBase(
+    val base = graft.streaming.StreamingQueries.scratchDir(
       "graft_stream_cur", dir)
     val survDir = s"$base/surv"
     val sigDir = s"$base/sig"
     @volatile var mapping: Option[DataFrame] = None
 
-    val src = s.readStream.schema(d.schema)
-      .option("maxFilesPerTrigger", "1").parquet(staging.toString)
-    val q = src.writeStream.foreachBatch { (batch0: DataFrame, bid: Long) =>
+    graft.streaming.StreamingQueries.runBatchesWithId(s, d.schema,
+        staging) { (batch0, bid) =>
       val ss = batch0.sparkSession
       // WIDTH PIN (the stream_components / stream_phash_dedup
       // precedent): the staged batch is one file, and the survivor
@@ -159,9 +150,7 @@ object StreamingCurationQueries {
         mapping = Some(StreamingComponentsQueries
           .advanceMapping(prev, newPairs))
       }
-      ()
-    }.trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
+    }
 
     // stage 4: the batch pipeline's readout over the accumulated state
     // (h is store plumbing, not part of the compared relation — project

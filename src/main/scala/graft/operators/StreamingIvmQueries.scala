@@ -2,7 +2,6 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 import graft.core.Tables
 
@@ -82,13 +81,12 @@ object StreamingIvmQueries {
       "graft_stream_ivm_stage_" + graft.streaming.StreamingQueries.pathTag(dir),
       batches)
 
-    val base = graft.streaming.StreamingQueries.stateBase(
+    val base = graft.streaming.StreamingQueries.scratchDir(
       "graft_stream_ivm", dir)
     val deltaDir = s"$base/deltas"
 
-    val src = s.readStream.schema(batches.head.schema)
-      .option("maxFilesPerTrigger", "1").parquet(staging.toString)
-    val q = src.writeStream.foreachBatch { (batch: DataFrame, bid: Long) =>
+    graft.streaming.StreamingQueries.runBatchesWithId(s, batches.head.schema,
+        staging) { (batch, bid) =>
       // each record folds to ±contributions: after-image adds (I, U),
       // before-image retracts (U, D); the null side of I/D carries dn=0
       // and a null group, dropped before the partial aggregate
@@ -111,9 +109,7 @@ object StreamingIvmQueries {
         // stay exactly-once — partials are NOT ratio-invariant, a
         // double-append would silently double-count
         .write.mode("overwrite").parquet(s"$deltaDir/b$bid")
-      ()
-    }.trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
+    }
 
     // merge = integer sum; groups retracted to zero rows disappear,
     // exactly as they are absent from the final snapshot's aggregate

@@ -2,7 +2,6 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 /** Incremental entity resolution — [[LinkageQueries.entityResolve]]
   * maintained as records arrive, composing the contracted-mapping CC
@@ -50,14 +49,13 @@ object StreamingLinkageQueries {
         pmod(graft.functions.PortableHash.raw(col("p_partkey")), lit(3))
           === i)))
 
-    val base = graft.streaming.StreamingQueries.stateBase(
+    val base = graft.streaming.StreamingQueries.scratchDir(
       "graft_stream_er", dir)
     @volatile var stringsPath: Option[String] = None
     @volatile var mappingPath: Option[String] = None
 
-    val src = s.readStream.schema(dirty.schema)
-      .option("maxFilesPerTrigger", "1").parquet(staging.toString)
-    val q = src.writeStream.foreachBatch { (batch: DataFrame, bid: Long) =>
+    graft.streaming.StreamingQueries.runBatchesWithId(s, dirty.schema,
+        staging) { (batch, bid) =>
       val ss = batch.sparkSession
       val b = batch.localCheckpoint(true)
       val bs = b.groupBy(col("blk"), col("dirty_name"))
@@ -109,9 +107,7 @@ object StreamingLinkageQueries {
       val nextMapping = s"$base/mapping_g$bid"
       next.write.mode("overwrite").parquet(nextMapping)
       mappingPath = Some(nextMapping)
-      ()
-    }.trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
+    }
 
     // the batch arm's readout tail over the final mapping
     val comp = s.read.parquet(mappingPath.get)

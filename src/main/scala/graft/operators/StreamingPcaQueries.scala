@@ -2,7 +2,6 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 /** Incremental PCA — the deterministic power-iteration fit
   * ([[EmbeddingQueries.embPcaPower]]) maintained over an arriving
@@ -42,27 +41,19 @@ import org.apache.spark.sql.streaming.Trigger
 object StreamingPcaQueries {
 
   def streamPcaPower(s: SparkSession, dir: String): DataFrame = {
+    import graft.streaming.StreamingQueries.{runBatchesWithId, scratchDir,
+      stageThirds}
     val d = graft.core.Tables(s, dir, "embeddings")
       .select(col("vec_id"), col("embedding"))
-    val (idMin, idMax) = graft.streaming.StreamingQueries.idRange(d, "vec_id")
-      .getOrElse(throw new IllegalArgumentException(
-        "empty input relation: nothing to stream"))
-    val b1 = idMin + (idMax - idMin) / 3
-    val b2 = idMin + 2 * (idMax - idMin) / 3
-    val staging = graft.streaming.StreamingQueries.stageBatches(
+    val staging = stageThirds(
       "graft_stream_pca_stage_" + graft.streaming.StreamingQueries.pathTag(dir),
-      Seq(d.filter(col("vec_id") <= b1),
-        d.filter(col("vec_id") > b1 && col("vec_id") <= b2),
-        d.filter(col("vec_id") > b2)))
+      d, "vec_id")
 
-    val base = graft.streaming.StreamingQueries.stateBase(
-      "graft_stream_pca", dir)
+    val base = scratchDir("graft_stream_pca", dir)
     val momentsDir = s"$base/moments"
     val sumsDir = s"$base/sums"
 
-    val src = s.readStream.schema(d.schema)
-      .option("maxFilesPerTrigger", "1").parquet(staging.toString)
-    val q = src.writeStream.foreachBatch { (batch: DataFrame, bid: Long) =>
+    runBatchesWithId(s, d.schema, staging) { (batch, bid) =>
       // one quantize pass per batch feeds both partials (each vector
       // lives wholly in its batch, so the moment self-join is batch-local).
       // EXPLICIT-width repartition on the join key before the checkpoint:
@@ -89,9 +80,7 @@ object StreamingPcaQueries {
       bq.groupBy(col("j"))
         .agg(sum(col("vq")).as("sj"), count(lit(1)).as("nb"))
         .write.mode("overwrite").parquet(s"$sumsDir/b$bid")
-      ()
-    }.trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
+    }
 
     // merge = integer sum over both stores, then the covariance identity
     // and the SAME iterate/loadings code path as the batch fit

@@ -2,7 +2,6 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 /** Incremental Hamming-space image dedup — the continuously-running form
   * of [[MultimodalQueries.dedupImagePhash]] (48-bit perceptual-hash
@@ -65,14 +64,13 @@ object StreamingPhashQueries {
         base.filter(col("doc_id") > b1),
         d.filter(col("doc_id") >= 1000000L)))
 
-    val stateBase = graft.streaming.StreamingQueries.stateBase(
+    val scratch = graft.streaming.StreamingQueries.scratchDir(
       "graft_stream_ph", dir)
-    val sigDir = s"$stateBase/sig"
+    val sigDir = s"$scratch/sig"
     @volatile var mapping: Option[DataFrame] = None
 
-    val src = s.readStream.schema(d.schema)
-      .option("maxFilesPerTrigger", "1").parquet(staging.toString)
-    val q = src.writeStream.foreachBatch { (batch0: DataFrame, bid: Long) =>
+    graft.streaming.StreamingQueries.runBatchesWithId(s, d.schema,
+        staging) { (batch0, bid) =>
       val ss = batch0.sparkSession
       // WIDTH PIN (the jaccardJoin/mwas-memo precedent): the staged
       // batch is one small file, and everything downstream of it is
@@ -135,9 +133,7 @@ object StreamingPhashQueries {
         mapping = Some(StreamingComponentsQueries
           .advanceMappingForProbe(prev, newPairs))
       }
-      ()
-    }.trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
+    }
 
     // readout = the batch query's tail over the ACCUMULATED fingerprint
     // store + final mapping (the corpus is never re-hashed) — same SQL

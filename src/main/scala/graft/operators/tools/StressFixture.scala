@@ -117,6 +117,7 @@ object StressFixture {
   private def genDup(spark: SparkSession, outDir: String, mult: Int): Unit = {
     val base = "/root/testdata/sf0.1"
     val src = spark.read.parquet(s"$base/documents.parquet")
+    requireWithinStride(src, "doc_id", 10000000L)
     (0 until mult).map { i =>
       src.withColumn("doc_id", col("doc_id") + lit(i * 10000000L))
     }.reduce(_ union _)
@@ -126,6 +127,18 @@ object StressFixture {
     val n = spark.read.parquet(s"$outDir/documents.parquet").count()
     println(s"[stress] wrote $n docs (${mult}x identical-set cliques) " +
       s"to $outDir")
+  }
+
+  /** Shifted copies `key + i·stride` stay disjoint only while every base
+    * key lies in [0, stride); a base fixture that outgrew the stride
+    * would make copies collide silently, so fail before writing. */
+  private def requireWithinStride(df: DataFrame, key: String,
+      stride: Long): Unit = {
+    val r = df.agg(min(col(key).cast("long")), max(col(key).cast("long")))
+      .head()
+    require(r.isNullAt(0) || (r.getLong(0) >= 0L && r.getLong(1) < stride),
+      s"$key range [${r.get(0)}, ${r.get(1)}] exceeds the copy stride " +
+        s"$stride: shifted copies would collide")
   }
 
   /** `genrel <outDir> [mult]`: a mult× relational fixture for the MWAS
@@ -150,6 +163,10 @@ object StressFixture {
       copies.write.mode(SaveMode.Overwrite).parquet(s"$outDir/$table.parquet")
       println(s"[stress] wrote ${mult}x $table to $outDir")
     }
+    requireWithinStride(spark.read.parquet(s"$base/orders.parquet"),
+      "o_orderkey", 10000000L)
+    requireWithinStride(spark.read.parquet(s"$base/customer.parquet"),
+      "c_custkey", 1000000L)
     replicate("orders",
       Map("o_orderkey" -> 10000000L, "o_custkey" -> 1000000L))
     replicate("lineitem", Map("l_orderkey" -> 10000000L))
@@ -195,6 +212,10 @@ object StressFixture {
     replicate("customer", Map("c_custkey" -> 1000000L))
     replicate("supplier", Map("s_suppkey" -> 100000L))
     replicate("part", Map("p_partkey" -> 1000000L))
+    requireWithinStride(spark.read.parquet(s"$base/orders.parquet"),
+      "o_orderkey", 10000000L)
+    requireWithinStride(spark.read.parquet(s"$base/customer.parquet"),
+      "c_custkey", 1000000L)
     replicate("orders",
       Map("o_orderkey" -> 10000000L, "o_custkey" -> 1000000L))
     replicate("lineitem", Map("l_orderkey" -> 10000000L,

@@ -69,8 +69,10 @@ object StreamingQueries {
         df.filter(col(keyCol) > b2)))
   }
 
-  /** Fresh pid-scoped scratch dir for a streaming state store, wiped on
-    * create and removed on JVM exit (the stageBatches lifecycle). */
+  /** Fresh pid-scoped scratch dir for a stream's state stores (partial/
+    * delta/mapping dirs), wiped on create and removed on JVM exit — the
+    * [[stageBatches]] lifecycle, kept in one place so no harness
+    * restates it. */
   private[graft] def scratchDir(name: String, dir: String): java.io.File = {
     val base = new java.io.File(
       System.getProperty("java.io.tmpdir"),
@@ -102,23 +104,6 @@ object StreamingQueries {
         f(batch, bid); ()
       }.trigger(Trigger.AvailableNow()).start()
     q.awaitTermination()
-  }
-
-  /** Per-run scratch base for a stream's STATE stores (partial/delta/
-    * mapping dirs) — the same pid-scoped create-time wipe + exit-hook
-    * cleanup discipline [[stageBatches]] applies to its staging dir,
-    * factored so each harness doesn't restate it (the r13 TempDirs
-    * hook-registration bug lived in exactly this kind of restated
-    * boilerplate). */
-  private[graft] def stateBase(name: String, dir: String): java.io.File = {
-    val base = new java.io.File(
-      System.getProperty("java.io.tmpdir"),
-      name + "_" + pathTag(dir) +
-        "_" + ProcessHandle.current().pid())
-    org.apache.commons.io.FileUtils.deleteQuietly(base)
-    base.mkdirs()
-    graft.core.TempDirs.cleanOnExit(base.toPath)
-    base
   }
 
   /** Stage pre-split batches as single parquet files with ASCENDING

@@ -8,7 +8,7 @@ import org.apache.spark.sql.SparkSession
   * source more times than expected. Catalyst performs no common-subplan
   * reuse, so a derived relation consumed by two operators silently
   * re-scans (and re-computes) its whole subtree — the smell that cost
-  * `dedup_canonical` a duplicated corpus pass (see `CanonicalAb`).
+  * `dedup_canonical` a duplicated corpus pass (NOTES_r10).
   *
   * A repeated scan is NOT automatically wrong (self-joins and
   * inclusion–exclusion formulations legitimately read a table twice);
